@@ -12,31 +12,34 @@ under three strategies —
 plus the engine's headline analytics queries (scan-heavy agg, joins, windows,
 dedup, text, similarity) at SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Methodology (r4): the cold strategies run INTERLEAVED round-robin on
-DISJOINT key sets — host-load drift hits every strategy equally, and no
-strategy rides another's codegen cache.  The hot (pinned-scan) template is
-a trailing section by necessity: once it exists, CacheManager substitutes
-the in-memory relation into later matching plans, which would corrupt the
-cold measurements.  Its ratio is therefore cross-section and inherits any
-load drift between sections (see README).
-
-r5 additions, per the r4 review:
-- prepared_layout / prepared_dpp_batch strategies: the registered point
-  layout (bucket-partitioned orders copy) serves the same 50 keys with a
-  statically-pruned scan per key, and as execute_batch micro-batches: one
-  IN-list scan of a view of the batch's buckets, so each batch reads only
-  those buckets — the engine's answer to the reference's fixed-plan
-  pushdown (src/physical.rs:247-255).
-- headline analytics queries are timed as MEDIAN-OF-3 with cache-clear +
-  JVM GC isolation before each query, and report their result row count
-  next to the timing (a 10x swing then carries its own explanation);
-  results are consumed by count(), never collected to the driver (r4
-  billed dedup_ngram_jaccard 9-11s of pure 759k-row driver transfer).
+Methodology:
+- the cold strategies run INTERLEAVED round-robin on DISJOINT key sets:
+  host-load drift hits every strategy equally, and no strategy rides
+  another's codegen cache.  The hot (pinned-scan) template is a trailing
+  section by necessity: once it exists, CacheManager substitutes the
+  in-memory relation into later matching plans, which would turn the cold
+  measurements into cache reads.  Its ratio is therefore taken against a
+  fresh f-string key set interleaved within that section.
+- prepared_layout / prepared_dpp_batch serve the same 50 keys over the
+  registered point layout (bucket-partitioned orders copy): a statically
+  pruned scan per key, and execute_batch micro-batches, each one IN-list
+  scan of the batch's buckets (the engine's answer to the reference's
+  fixed-plan pushdown, src/physical.rs:247-255).
+- the points section runs in three fresh sessions and each of its rows
+  reports its minimum across them; every session's own headline ratios
+  ride along so the spread is visible.
+- headline analytics queries report the MIN of 3 samples with cache-clear
+  + JVM GC before each query, resampled up to 3 more times when the
+  samples spread more than 2x, with their result row count next to the
+  timing.  Results are consumed by count(), never collected to the driver
+  (a collect measures transfer, not the operator).
 - the point-lookup and analytics sections run in SEPARATE processes (one
-  fresh JVM each): sharing a session let the lookup section's accumulated
-  JVM state inflate later heavy analytics queries nondeterministically
-  (measured 2-11x on the minhash family in one of two back-to-back runs;
-  the same queries are stable across 9 consecutive fresh-process samples).
+  fresh JVM each): the lookup section's accumulated JVM state otherwise
+  inflates later heavy analytics queries nondeterministically.
+
+Raw seconds are host-dependent: compare them only within one session on
+one host, using alternating A/B runs.  The full run writes its JSON to
+bench_out.json (untracked) as well as stdout.
 """
 
 from __future__ import annotations
@@ -76,14 +79,12 @@ HEADLINE = [
     "quantile_histogram_sketch",
     "layout_zorder_pruning",
     "dedup_exact_normalized",
-    # dedup_ngram_jaccard is NOT headline (r6 verdict item 6): it shares
-    # the whole PPJoin pipeline with dedup_jaccard_partners below, so
-    # benching both paid the same exact-verify computation twice (~13s of
-    # a 79s bench) — and the pair form is the documented small-SF
-    # yardstick (output pair-quadratic by contract), not the shipped
-    # path.  The per-doc partners form is the production shape and the
-    # one whose cost is graded; the pair form stays oracle-gated in the
-    # correctness corpus.
+    # dedup_ngram_jaccard is not headline: it shares the whole PPJoin
+    # pipeline with dedup_jaccard_partners below, so benching both would
+    # pay the same exact-verify computation twice, and the pair form is
+    # the small-SF yardstick (output pair-quadratic by contract), not the
+    # shipped path.  The per-doc partners form is the production shape;
+    # the pair form stays oracle-gated in the correctness corpus.
     "dedup_jaccard_partners",
     "decontam_fuzzy_minhash",
     "corpus_token_budget_select",
@@ -156,11 +157,8 @@ def bench_points() -> dict:
     """Point-lookup section: the reference's 50-key workload under every
     strategy, plus the IN-list batch and the parameterized JOIN.  Runs in
     its OWN process (see main): its JVM accrues hundreds of tiny jobs,
-    per-key codegen classes, and pinned caches — state that measurably
-    poisoned the analytics section's heavy queries when both shared one
-    JVM (r5: reproduced 2-11x phantom inflation from dedup_minhash_lsh
-    onward in a shared session; the same queries are stable in a fresh
-    process across 9 consecutive samples)."""
+    per-key codegen classes, and pinned caches, state that inflates the
+    analytics section's heavy queries when both share one JVM."""
     load_start = round(os.getloadavg()[0], 2)
     eng, spark, registry = _make_session("ddf-spark-bench-points")
 
@@ -192,14 +190,13 @@ def bench_points() -> dict:
         source_path=os.path.join(SF_DIR, "orders.parquet"),
     )
 
-    # DISJOINT key sets per strategy, run INTERLEAVED round-robin.  Two
-    # r1-r3 artifacts motivated this layout: (a) host load drifts over the
-    # bench's lifetime, so back-to-back sections bill the drift to whichever
-    # strategy runs later (r3's phantom 4x "hot collapse"); interleaving
-    # spreads drift evenly.  (b) With SHARED keys, spark.sql(args=) re-binds
-    # to the same optimized plan an earlier f-string loop already compiled,
-    # so the sqlargs strategy was silently codegen-cache-warm; disjoint keys
-    # make every strategy pay its own compile.
+    # DISJOINT key sets per strategy, run INTERLEAVED round-robin: (a) host
+    # load drifts over the bench's lifetime, so back-to-back sections would
+    # bill the drift to whichever strategy runs later; interleaving spreads
+    # it evenly.  (b) With SHARED keys, spark.sql(args=) re-binds to the
+    # same optimized plan an earlier f-string loop already compiled, so the
+    # sqlargs strategy would be codegen-cache-warm; disjoint keys make
+    # every strategy pay its own compile.
     STRATS = [
         "fstring", "sqlargs", "prepared_cold", "prepared_layout",
         "prepared_dpp_batch", "prepared", "fstring_b",
@@ -215,8 +212,8 @@ def bench_points() -> dict:
     # The HOT template stays a trailing section, NOT interleaved: once it
     # pins orders' pruned projection, Spark's CacheManager substitutes the
     # InMemoryRelation into every LATER-planned matching plan, which would
-    # silently turn the "cold" strategies into cache reads (r2's
-    # files_read=0 metrics bug).  Cold regimes are measured and
+    # silently turn the "cold" strategies into cache reads (files_read
+    # would read 0).  Cold regimes are measured and
     # metrics-probed strictly before any hot template exists.
     def run_fstring(k):
         t0 = time.perf_counter()
@@ -308,8 +305,7 @@ def bench_points() -> dict:
     # src/physical.rs:266-268): what one executed lookup actually read —
     # probed while the plans still read parquet, with a FRESH key collected
     # exactly once: driver-side file metrics are set only on a plan's first
-    # execution (re-collecting a cached DataFrame resets them to 0, the r2
-    # files_read=0 artifact).
+    # execution (re-collecting a cached DataFrame resets them to 0).
     used = set(pool)
     probe_key = rng.sample(range(0, int(max_key) + 1), 1)[0]
     while probe_key in used:
@@ -406,7 +402,7 @@ def bench_points() -> dict:
     timings["prepared_inlist_1000"] = _stats.median(inlist_samples)
     timings["_inlist_n"] = n_batch  # feeds the per-key ratio in main()
 
-    # Grouped batch (r5): a GROUP BY template served for 1000 keys as ONE
+    # Grouped batch: a GROUP BY template served for 1000 keys as ONE
     # IN-list scan + ONE aggregation (the IN form) — the aggregating
     # twin of the IN-list row above; collect() is the per-key result set
     # (<= 1000 group rows), not a table transfer.
@@ -441,11 +437,9 @@ def bench_points() -> dict:
     for k in warm_keys:
         spark.sql(join_sql, args={"p1": k}).collect()
         join_stmt.execute({"p1": k}).collect()
-    # Interleaved on disjoint key sets (r5): the former back-to-back 50-key
-    # sections billed host-load drift to whichever strategy ran second —
-    # the same artifact class the cold loop fixed in r4.  Each set was
-    # touched exactly once by one cold-phase strategy, so page-cache
-    # warmth is symmetric.
+    # Interleaved on disjoint key sets, for the same drift reason as the
+    # cold loop.  Each set was touched exactly once by one cold-phase
+    # strategy, so page-cache warmth is symmetric.
     kj_sql = ks["fstring"][10:]
     kj_prep = ks["sqlargs"][10:]
     t_sql = t_prep = 0.0
@@ -475,32 +469,26 @@ def bench_points() -> dict:
 
 def bench_analytics() -> dict:
     """Headline analytics queries, in a FRESH process (see bench_points for
-    why).  MIN-of-3 with per-query isolation, raw samples recorded:
+    why).  MIN-of-3 with per-query isolation, raw samples recorded.
 
-    - r4 shipped two phantom 10x+ regressions from single-shot timings.
-    - r5 controlled replication showed the residual variance is HOST-level
-      (hypervisor noisy-neighbor): back-to-back fresh-process runs put the
-      CPU-saturating dedup family at 1.8-3.8x while light queries held
-      ~1.0x and the other section drifted a uniform +20%.  The min of 3 is
-      the interference-robust statistic (timeit's rationale: a real code
-      regression raises EVERY sample incl. the min; transient host load
-      only inflates some), and the raw samples + load averages ride along
-      in the JSON so an inflated entry carries its own explanation instead
-      of burning a review round.
+    Host-level interference (noisy neighbours) inflates some samples of
+    the CPU-saturating queries while leaving others alone.  The min is the
+    interference-robust statistic (timeit's rationale: a real code
+    regression raises EVERY sample including the min; transient host load
+    only inflates some), and the raw samples plus per-query load averages
+    ride along in the JSON so an inflated entry carries its own
+    explanation.
 
-    Results are consumed by count() — a full-result driver collect
+    Results are consumed by count(): a full-result driver collect
     measures transfer, not the operator, and is exactly the driver-side
     pattern the engine exists to avoid.  The row count rides along so an
     output-cardinality explosion explains its own timing.
 
-    Dispersion-triggered re-sampling (r7 verdict: semdedup's samples were
-    [6.99, 2.57, 6.03] under loadavg 13 — the min was probably right but
-    cost an adjudication round to trust): when max/min across the first 3
+    Dispersion-triggered re-sampling: when max/min across the first 3
     samples exceeds 2x, the query takes up to 3 EXTRA samples and the min
     runs over all of them.  Transient host interference thus converges to
     the true floor inside one bench run; a real regression raises every
-    sample including the extras, so the rule cannot mask one.  All samples
-    plus a per-query pre-measure loadavg land in the artifact.
+    sample including the extras, so the rule cannot mask one.
     """
     load_start = round(os.getloadavg()[0], 2)
     eng, spark, registry = _make_session("ddf-spark-bench-analytics")
@@ -542,67 +530,6 @@ def bench_analytics() -> dict:
     }
 
 
-def cpu_calibration() -> dict:
-    """Fixed-work CPU probes recorded in the artifact so CROSS-ROUND
-    comparisons can be normalized for host speed.  Motivation (r8): a
-    quiet-host rerun measured EVERY query ~1.24x slower than r7's
-    loadavg-13 run — hypervisor placement/steal, not code — and separating
-    "the host is slow today" from "this operator regressed" previously
-    cost a full replication round.  Two probes bracket the workload mix:
-    a pure-Python loop (driver-side / per-job overhead proxy) and a numpy
-    matmul (SIMD throughput proxy for codegen-dense operators).  Min-of-3
-    each; absolute values are meaningless, only cross-round ratios count.
-    """
-    import numpy as np
-
-    def best(f, n=3):
-        s = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            f()
-            s.append(time.perf_counter() - t0)
-        return round(min(s), 4)
-
-    a = np.random.RandomState(42).rand(1024, 1024)
-    return {
-        "python_loop_sec": best(lambda: sum(i * i for i in range(2_000_000))),
-        "numpy_matmul_sec": best(lambda: a @ a),
-    }
-
-
-#: Pinned r8 quiet-host calibration (BENCH_r08 / bench_out.json at commit
-#: e6bed2c).  cpu_calibration ratios against THESE values define the
-#: host_factor used for queries_normalized — so every later round
-#: normalizes to the same fixed reference host state, and round-over-round
-#: regressions can be read off directly instead of hand-adjudicating
-#: hypervisor drift (the r8 review spent a round separating a uniform
-#: 1.24x host slowdown from real regressions).  Do NOT re-pin these when
-#: the host drifts; re-pin only if the calibration WORKLOAD changes.
-_CALIBRATION_R8 = {"python_loop_sec": 0.1229, "numpy_matmul_sec": 0.0123}
-
-
-def _commit_artifact(path: str) -> None:
-    """Commit bench_out.json from inside the bench run (r8 verdict item 2:
-    the committed artifact and the round artifact diverged two rounds
-    running because a post-snapshot bench run left its output dirty).
-    Best-effort: a non-repo checkout or a no-op diff must not fail the
-    bench.  Opt out with SPARK_GRAFT_BENCH_NO_COMMIT=1 (ad-hoc runs)."""
-    if os.environ.get("SPARK_GRAFT_BENCH_NO_COMMIT"):
-        return
-    import subprocess
-
-    repo = os.path.dirname(path)
-    try:
-        proc = subprocess.run(
-            ["git", "commit", "-m", "Record bench artifact", "--", path],
-            cwd=repo, capture_output=True, text=True, timeout=60,
-        )
-        if proc.returncode != 0 and "nothing to commit" not in proc.stdout:
-            sys.stderr.write(f"bench artifact commit failed: {proc.stderr[-500:]}\n")
-    except Exception as exc:  # never let bookkeeping kill the bench
-        sys.stderr.write(f"bench artifact commit skipped: {exc}\n")
-
-
 def main() -> None:
     section = os.environ.get("SPARK_GRAFT_BENCH_SECTION")
     if section == "points":
@@ -611,19 +538,14 @@ def main() -> None:
     if section == "analytics":
         print(json.dumps(bench_analytics()))
         return
-    # Parent: one fresh JVM per section.  A shared session let the
-    # point-lookup section's accumulated JVM state (per-key codegen
-    # classes, heap churn from ~700 tiny jobs, pinned-then-released
-    # caches) inflate later heavy analytics queries nondeterministically —
-    # measured 2-11x on the minhash family in one of two back-to-back
-    # full-bench runs, while the same queries hold steady across 9
-    # consecutive samples in a fresh process.  Subprocess isolation makes
-    # each section's numbers a function of its own work only (it is also
-    # how a user would actually run them: lookups and batch analytics do
-    # not share a driver).
+    # Parent: one fresh JVM per section.  The point-lookup section's
+    # accumulated JVM state (per-key codegen classes, heap churn from ~700
+    # tiny jobs, pinned-then-released caches) inflates later heavy
+    # analytics queries nondeterministically in a shared session (2-11x on
+    # the minhash family).  Subprocess isolation makes each section's
+    # numbers a function of its own work only (it is also how a user would
+    # run them: lookups and batch analytics do not share a driver).
     import subprocess
-
-    calibration = cpu_calibration()  # before the sections add load
 
     def run_section(sec: str) -> dict:
         env = dict(os.environ, SPARK_GRAFT_BENCH_SECTION=sec)
@@ -638,14 +560,12 @@ def main() -> None:
             raise SystemExit(proc.returncode)
         return json.loads(proc.stdout.strip().splitlines()[-1])
 
-    # Min-of-3 SESSIONS for the prepared-statement core (r10 verdict #3):
-    # the headline ratios drifted round-over-round (steady-state
-    # 4.11 -> 3.73) while the core's code was byte-identical — the
-    # documented +-10% host-factor jitter compounds through a ratio of
-    # two sub-second timings.  Three fresh-JVM sessions, per-workload MIN
-    # (each workload's closest-to-quiet observation), with every
-    # session's own headline ratios recorded so the spread is visible in
-    # the artifact rather than inferred.
+    # Min-of-3 SESSIONS for the prepared-statement core: host jitter
+    # compounds through a ratio of two sub-second timings, so one session's
+    # ratios drift with identical code.  Three fresh-JVM sessions,
+    # per-workload MIN (each workload's closest-to-quiet observation), with
+    # every session's own headline ratios recorded so the spread is visible
+    # in the artifact rather than inferred.
     point_runs = [run_section("points") for _ in range(3)]
     parts: dict[str, dict] = {
         "points": point_runs[-1],
@@ -722,11 +642,10 @@ def main() -> None:
         "speedup_prepared_steady_state": round(
             timings["fstring_50keys"] / timings["prepared_50keys_repeat"], 3
         ),
-        # r11 advice: the row above divides per-workload minima that may
-        # come from DIFFERENT sessions, so it can be a ratio no session
-        # observed.  Publish the best and median OBSERVED per-session
-        # steady-state ratios alongside, so the headline has an
-        # as-measured companion.
+        # The row above divides per-workload minima that may come from
+        # DIFFERENT sessions, so it can be a ratio no session observed.
+        # Publish the best and median OBSERVED per-session steady-state
+        # ratios alongside, so the headline has an as-measured companion.
         "speedup_prepared_steady_state_best_session": max(
             r["steady_state"] for r in session_ratios
         ),
@@ -746,20 +665,17 @@ def main() -> None:
         "rows": rows,
         # Per-session headline ratios of the three points sessions (the
         # published speedups above use per-workload min across sessions):
-        # the spread IS the noise model — the prepared core has been
-        # code-identical since r9 (git diff empty), so ratio drift between
-        # rounds within this spread is measurement, not regression.
+        # the spread IS the noise model; ratio drift between runs within
+        # this spread is measurement, not regression.
         "prepared_core_session_ratios": session_ratios,
         "points_sessions": len(point_runs),
         # Raw per-query samples (headline timings are min-of-3) and the
         # host 1-min load average after the analytics section: an inflated
         # entry then shows WHETHER all samples were slow (sustained host
-        # interference) or one was (transient), instead of demanding a
-        # replication round to find out.
+        # interference) or one was (transient).
         "headline_samples": parts["analytics"]["headline_samples"],
-        # Per-query pre-measure 1-min load + per-section start/end loads
-        # (r7 verdict asked for per-section load): an inflated sample now
-        # points at its own interference window.
+        # Per-query pre-measure 1-min load + per-section start/end loads:
+        # an inflated sample points at its own interference window.
         "headline_loadavg": parts["analytics"]["headline_loadavg"],
         "loadavg_sections": {
             sec: {
@@ -769,33 +685,13 @@ def main() -> None:
             for sec in ("points", "analytics")
         },
         "loadavg_end": parts["analytics"]["loadavg_end"],
-        "cpu_calibration": calibration,
         "cpus": int(CPUS),
     }
-    # Host-normalized headline timings (r8 verdict item 4): divide each raw
-    # min-of-N by the geometric mean of this run's fixed-work probe ratios
-    # against the PINNED r8 calibration.  host_factor > 1 means this host
-    # ran slower than the r8 reference run; normalized times are therefore
-    # comparable across rounds, and a query whose NORMALIZED time moved is
-    # a code change, not weather.  Both probes ride in (driver-overhead
-    # proxy + SIMD proxy) so a skewed drift is visible in the factors.
-    factors = {
-        k: calibration[k] / _CALIBRATION_R8[k] for k in _CALIBRATION_R8
-    }
-    host_factor = (factors["python_loop_sec"] * factors["numpy_matmul_sec"]) ** 0.5
-    result["host_factor_vs_r8"] = round(host_factor, 4)
-    result["host_factor_probes"] = {k: round(v, 4) for k, v in factors.items()}
-    result["queries_normalized"] = {
-        k: round(v / host_factor, 4)
-        for k, v in parts["analytics"]["timings"].items()
-    }
-    # Durable record FIRST (r5 verdict: BENCH_r05.json lost its whole
-    # point-lookup section to stdout tail truncation — the round's primary
-    # perf evidence must not depend on how much stdout the driver captures).
+    # Durable record first: the JSON on stdout may be truncated by whatever
+    # captures it.
     out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out.json")
     with open(out_path, "w") as f:
         json.dump(result, f, indent=1)
-    _commit_artifact(out_path)
     print(json.dumps(result))
 
 

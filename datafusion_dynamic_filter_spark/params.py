@@ -208,12 +208,16 @@ def in_context_placeholders(sql: str) -> set[str]:
 
 
 def bind_text(sql: str, phs: list[Placeholder], bound: dict) -> str:
-    """Substitute canonical placeholder occurrences with SQL literals."""
+    """Substitute canonical placeholder occurrences with SQL literals.  A
+    negative literal is parenthesised: written straight after the
+    statement's own ``-`` (``k-$2``), its sign would open a ``--`` comment
+    that swallows the rest of the line."""
     parts = []
     last = 0
     for ph in phs:
         parts.append(sql[last : ph.start])
-        parts.append(to_sql_literal(bound[ph.canonical]))
+        lit = to_sql_literal(bound[ph.canonical])
+        parts.append(f"({lit})" if lit.startswith("-") else lit)
         last = ph.end
     parts.append(sql[last:])
     return "".join(parts)

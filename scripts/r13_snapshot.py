@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Snapshot registered-query results for before/after equivalence checks
-during the r13 optimization round.
+"""Snapshot registered-query results for before/after equivalence checks:
+run ``--out`` at the parent commit and ``--check`` at the change.
 
 Writes (or compares against) a JSON file of per-query result digests:
 sha256 over the order-insensitive normalized rows (same normalization as

@@ -15,14 +15,14 @@ Methodology is unchanged from scaling_probe.py: one fresh child process
 per tier (no inherited JVM state), the tier's recorded sample count,
 clearCache + GC isolation inside the child.
 
-STANDING PROTOCOL (r13, README "Standing protocol"): a refresh for
+STANDING PROTOCOL (README "Standing protocol"): a refresh for
 TOUCHED code must include at least one probe whose code is UNCHANGED
 since its committed row — the same-day untouched control.  The
 control's ratio to its committed value is that session's measured host
 factor; the touched probes' movements are adjudicated against it.  The
-sf100 tier's wall-clocks sit in an I/O-scheduling regime the CPU
-calibration cannot see (measured ~2x cross-day swings on identical
-code, r11/r12); a refresh without a control is a borrowed-drift number.
+sf100 tier's wall-clocks sit in an I/O-scheduling regime that CPU speed
+does not show (measured ~2x cross-day swings on identical code); a
+refresh without a control is a borrowed-drift number.
 
 Usage: python scripts/refresh_probe.py dedup_semdedup [more names ...]
 """

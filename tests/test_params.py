@@ -105,6 +105,30 @@ def test_bind_text():
     assert bind_text(sql, phs, bound) == "SELECT * FROM t WHERE a = 'x'"
 
 
+@pytest.mark.parametrize("value, lit", [
+    (-3, "(-3)"), (-1.5, "(-1.5D)"), (Decimal("-1.50"), "(-1.50BD)"), (-0.0, "(-0.0D)"),
+])
+def test_bind_text_negative_after_minus(value, lit):
+    # `k-$2` with a negative value must not render `k--3`: Spark reads
+    # `--` as a comment and drops the rest of the line.
+    sql, phs = canonicalize("SELECT k-$2 AS d FROM t WHERE k IN $1")
+    bound = normalize_params({"$1": [1, 2], "$2": value}, phs)
+    assert bind_text(sql, phs, bound) == f"SELECT k-{lit} AS d FROM t WHERE k IN (1, 2)"
+
+
+@pytest.mark.parametrize("mode", ["literal", "auto"])
+@pytest.mark.parametrize("value", [-3, -1.5, Decimal("-1.50")], ids=repr)
+def test_negative_scalar_after_minus_rows(engine, mode, value):
+    engine.register_memtable("neg_bind", [(1,), (2,), (3,)], "k int")
+    stmt = engine.prepare("SELECT k-$2 AS d FROM neg_bind WHERE k IN $1", mode=mode)
+    assert (stmt.fallback_reason is None) == (mode == "auto")
+    try:
+        got = sorted(r["d"] for r in stmt.execute({"$1": [1, 3], "$2": value}).collect())
+    finally:
+        stmt.close()
+    assert got == [1 - value, 3 - value]
+
+
 def test_placeholder_operand_scan():
     # The operand is the column compared by `=` or IN just before each
     # placeholder; any other position has none.  Quoted text and comments

@@ -106,8 +106,8 @@ def test_non_ddl_statements_forwarded(engine, users):
 
 
 def test_list_param_cache_key_hashable(engine, users):
-    # round-2 ADVICE: list-valued IN-list params made the plan-cache key
-    # unhashable (TypeError) in round 1
+    # A list-valued IN-list param is part of the plan-cache key, so the key
+    # must be hashable; the second execute takes the cache-hit path.
     stmt = engine.prepare("SELECT id FROM users WHERE id IN $1")
     rows = stmt.execute({"$1": [1, 3]}).collect()
     assert sorted(r.id for r in rows) == [1, 3]
@@ -116,8 +116,8 @@ def test_list_param_cache_key_hashable(engine, users):
 
 
 def test_groupby_without_aggregate_falls_back(engine, users):
-    # round-2 ADVICE: SELECT a FROM t GROUP BY a once raised at execute time
-    # on the fast path.  Spark binds it now: dynamic, with per-row batches.
+    # SELECT a FROM t GROUP BY a (no aggregate) binds on the dynamic path,
+    # and its batches take the per-row LATERAL form.
     stmt = engine.prepare("SELECT name FROM users WHERE id >= $1 GROUP BY name")
     assert stmt.mode == "dynamic" and stmt._template.batch_form == "lateral"
     rows = stmt.execute({"$1": 4}).collect()
@@ -127,8 +127,8 @@ def test_groupby_without_aggregate_falls_back(engine, users):
 
 
 def test_execute_batch_aggregating_per_row_semantics(engine, users):
-    # round-2 ADVICE: aggregating statements must yield one result per
-    # parameter row (union path), never one global aggregate over all keys
+    # An aggregating statement yields one result per parameter row (the
+    # union of per-row results), never one global aggregate over all keys.
     stmt = engine.prepare("SELECT COUNT(*) AS n FROM users WHERE id >= $1")
     df = stmt.execute_batch([[4], [5], [4]])  # duplicate row binds once
     counts = sorted(r.n for r in df.collect())

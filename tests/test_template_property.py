@@ -1,10 +1,12 @@
 """Property-based equivalence of the prepared fast path: for randomized
 fast-path statements and parameter values, the compiled-template execution
 must return exactly the rows of the same SQL with literals inlined (ground
-truth via spark.sql).  The template path's parser/binder is hand-rolled
-(simple_parser), so this fuzzes precisely the surface where a silent
-wrong-rows bug could hide (the r5 OR-precedence ADVICE finding was exactly
-this class).
+truth via spark.sql).  Spark parses and binds every execute, so what this
+guards is what the template decides on its own: the plan facts read off
+its trial analysis (which placeholder comparisons are top-level WHERE
+conjuncts over a scan, driving codegen policy, layout adoption and bucket
+pruning) and the batch form (IN list, LATERAL, or per-row union), where a
+wrong decision returns silently wrong rows.
 
 Kept fast: one shared engine/table, bounded example counts, no per-example
 Spark session work beyond the two queries.

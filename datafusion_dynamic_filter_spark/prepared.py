@@ -29,11 +29,15 @@ Execution strategies (why, not a port of DynamicFilterExec):
   artifact of shared mutable filter state that params-as-literals does not
   have.
 - ``literal`` (general path): ``spark.sql(sql, args=params)`` per execute
-  on the caller's session — semantically exact for ANY Spark SQL
-  statement; this is the twin of the reference's precomputed-logical-plan
-  baseline (benches/dynamic_filter_benchmark.rs:146-183).  Statements with
-  no batch form (neither rewrite analyzes) and non-query statements land
-  here, recording why in ``fallback_reason``.
+  — semantically exact for ANY Spark SQL statement; this is the twin of
+  the reference's precomputed-logical-plan baseline
+  (benches/dynamic_filter_benchmark.rs:146-183).  Statements with no batch
+  form (neither rewrite analyzes) and non-query statements land here,
+  recording why in ``fallback_reason``.  A query plans on a private clone
+  of the caller's session made at prepare, so it reads the caller's temp
+  views as they were at prepare (as a template does, and as the
+  reference, which plans at prepare) and carries its own codegen gate; a
+  non-query runs on the caller's session, where its side effects belong.
 - ``execute_batch(rows)``: N parameter sets in one call; the result is the
   union of per-row results.  A template runs one of two rewrites: the IN
   form, the rows' values bound into the text as one literal IN list — the
@@ -62,7 +66,8 @@ from .params import (
     normalize_params,
     scan,
 )
-from .simple_parser import CompiledTemplate, parse_simple_select, sql_df
+from .simple_parser import (CompiledTemplate, clone_session, footer_rows, interpret_if_few,
+                            parse_simple_select, sql_df)
 
 def _freeze(v):
     """Hashable canonical form of a bound parameter value (list-valued
@@ -107,15 +112,20 @@ class PreparedStatement:
     default keeps the parquet scan with static pushdown (the 100 TB
     regime).
 
-    The engine picks per-execution wholestage codegen itself.  Spark
-    inlines bound primitive literals into generated sources, so every new
-    key compiles a new class (~10-40 ms driver-side) and churns the
-    driver-global compile cache — for selective point lookups that JIT
-    never pays back (measured: interpreted eval beats even compile-warm
-    codegen for this shape).  Point-lookup and hot templates therefore run
-    without wholestage codegen; scan-heavy cold statements keep it, which
-    is the right trade at 100 TB where compile time amortizes over the
-    scan.
+    The engine picks per-execution codegen itself.  Spark inlines bound
+    primitive literals into generated sources, so every new key compiles a
+    new class (~10-40 ms driver-side, then the JVM's JIT compile of it)
+    and churns the driver-global compile cache — for selective point
+    lookups that never pays back (measured: interpreted eval beats even
+    compile-warm codegen for this shape).  Point-lookup and hot templates
+    therefore run without wholestage codegen; scan-heavy cold statements
+    keep it, which is the right trade at 100 TB where compile time
+    amortizes over the scan.  The codegen gate goes further when an
+    execution touches at most ``simple_parser._INTERP_MAX_SCAN_ROWS`` rows
+    of any table (a hot batch, a layout bucket, a flat table's rows read
+    from its parquet footers): point-lookup and hot templates and
+    literal-path queries then run with no generated code, so a fresh key
+    compiles no class.  ``interpreted`` reports that choice.
 
     ``execute()`` binds a single parameter set as plan literals, which
     reach the scan as pushed filters — parquet row-group pruning cold,
@@ -138,11 +148,12 @@ class PreparedStatement:
     sources.prepared_dpp_partition_pruning and its plan gate); when they
     cover every bucket it reads the table as registered.
 
-    Thread-safety: template-mode statements plan on a private cloned
-    SparkSession with the codegen policy in its own SQLConf; literal-path
-    statements plan on the caller's session and never change its conf.
-    No statement toggles a session-global setting, so planning needs no
-    lock; one lock guards the plan cache and the execution count."""
+    Thread-safety: templates and literal-path queries plan on a private
+    cloned SparkSession with the codegen policy in its own SQLConf;
+    literal-path non-queries run on the caller's session and never change
+    its conf.  No statement toggles a session-global setting, so planning
+    needs no lock; one lock guards the plan cache and the execution
+    count."""
 
     def __init__(self, spark, sql: str, *, mode: str = "auto", hot: bool = False,
                  layouts: dict | None = None, plan_cache_size: int = 256):
@@ -204,11 +215,18 @@ class PreparedStatement:
             name: ([None] if name in self._in_placeholders else None)
             for name in self.param_names
         }
+        # The literal path plans a query on a private clone of the caller's
+        # session (its temp views as of prepare, its own codegen policy); a
+        # non-query acts on the caller's session.
+        self._session, self._interpreted = spark, False
         if self._template is None and self._is_query:
+            self._session = clone_session(spark)
             # Typed-NULL pre-binding pass (reference src/physical.rs:94-140):
             # analyze the full statement once with NULL-bound placeholders so
-            # prepare() surfaces analysis errors, not execute().
-            self._literal_df(self._null_args)
+            # prepare() surfaces analysis errors, not execute().  Its tables
+            # feed the codegen gate.
+            analyzed = self._literal_df(self._null_args)._jdf.queryExecution().analyzed()
+            self._interpreted = interpret_if_few(self._session, footer_rows(analyzed))
 
     # -- execution ---------------------------------------------------------
 
@@ -247,8 +265,18 @@ class PreparedStatement:
         return df
 
     def _literal_df(self, bound: dict):
-        """The literal path: the statement on the caller's session."""
-        return sql_df(self.spark, self.canonical_sql, self.placeholders, bound)
+        """The literal path: the statement on its session (a query's
+        private clone, else the caller's)."""
+        return sql_df(self._session, self.canonical_sql, self.placeholders, bound)
+
+    @property
+    def interpreted(self) -> bool:
+        """Whether executions run with no generated code (no wholestage
+        codegen, interpreted expressions): the codegen gate's choice, made
+        at prepare, when an execution touches few rows
+        (``simple_parser.interpret_if_few``)."""
+        t = self._template
+        return t.interp_exprs if t is not None else self._interpreted
 
     def execute_batch(self, rows: list[dict | list | tuple]):
         """Execute one statement for the SET of N parameter rows at once

@@ -26,12 +26,14 @@ import re
 import threading
 from contextlib import contextmanager
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 from pyspark.logger import PySparkLogger
 from pyspark.sql import SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
+from .layouts import parquet_row_count
 from .params import (Placeholder, bind_text, find_placeholders, in_context_placeholders, scan,
                      to_sql_literal)
 from .plans import Node, from_json
@@ -40,11 +42,13 @@ from .plans import Node, from_json
 _OPERAND_RE = re.compile(r"(?<![\w.:])([A-Za-z_][\w.]*)\s*(=|IN)\s*$", re.IGNORECASE)
 _NOT_OPERANDS = {"NOT", "END", "NULL", "TRUE", "FALSE"}
 
-# Expression-codegen gate (r14): bound literals are inlined into generated
-# code, so every fresh key paid a Janino compile (~10-20 ms).  Interpreted
-# expressions win when an execution TOUCHES few rows (sf0.1: hot 2.54 ->
-# 1.89 s / 50 keys, layout 3.61 -> 3.28, DPP batches 1.27 -> 1.06) and lose
-# 6-14% on a flat 150k-row scan: the crossover is ~1e5 touched rows.
+# The codegen gate (``interpret_if_few``): bound literals are inlined into
+# generated code, so every fresh key paid a Janino compile (~10-20 ms) and
+# the JIT compile of the class after it.  Interpreted expressions win when
+# an execution TOUCHES few rows (sf0.1: hot 2.54 -> 1.89 s / 50 keys,
+# layout 3.61 -> 3.28, DPP batches 1.27 -> 1.06) and lose 6-14% on a flat
+# 150k-row scan: the crossover is ~1e5 touched rows.  Point-lookup and hot
+# templates and literal-path queries are gated; ``_flat`` is not.
 _INTERP_MAX_SCAN_ROWS = 131072
 
 # The params view in the LATERAL form's SQL; each batch gets a fresh name.
@@ -125,8 +129,71 @@ def sql_df(session, sql: str, placeholders: list[Placeholder], bound: dict):
     return session.sql(sql, args=bound)
 
 
-def _clone(session):
+def clone_session(session):
     return SparkSession(session.sparkContext, session._jsparkSession.cloneSession())
+
+
+def _leaf_rows(leaf) -> int | None:
+    """A JVM logical plan leaf's rows from the parquet footers of its
+    local input files, counted until they pass the gate's bound; None
+    unless it is a parquet relation over files listed when it was read
+    (an ``InMemoryFileIndex``: a catalog table lists its partitions on
+    demand, which may start a Spark job)."""
+    if leaf.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = leaf.relation()
+    if rel.getClass().getSimpleName() != "HadoopFsRelation":
+        return None
+    index = rel.location()
+    if rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat" or \
+            index.getClass().getSimpleName() != "InMemoryFileIndex":
+        return None
+    rows = 0
+    for uri in index.inputFiles():
+        url = urlparse(uri)
+        if url.scheme not in ("", "file"):
+            return None
+        rows += parquet_row_count(unquote(url.path))
+        if rows > _INTERP_MAX_SCAN_ROWS:
+            break
+    return rows
+
+
+def footer_rows(jplan) -> int | None:
+    """The most rows one leaf of the JVM logical plan ``jplan`` (subquery
+    plans included) holds, read from parquet footers (no Spark job), or a
+    count past the gate's bound; None when a leaf has no footer count (a
+    ``LocalRelation``, CSV, JSON, a ``SELECT`` without ``FROM``).  CTE
+    references are skipped: the plan holds each CTE's definition, whose
+    leaves count."""
+    subs = jplan.subqueriesAll()
+    most = None
+    for plan in [jplan, *(subs.apply(i) for i in range(subs.size()))]:
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "CTERelationRef":
+                continue
+            rows = _leaf_rows(leaf)
+            if rows is None or rows > _INTERP_MAX_SCAN_ROWS:
+                return rows
+            most = max(most or 0, rows)
+    return most
+
+
+def interpret_if_few(session, rows: int | None) -> bool:
+    """The codegen gate: when an execution touches at most
+    ``_INTERP_MAX_SCAN_ROWS`` rows of any table (``rows``, None when not
+    known), ``session`` plans with no wholestage codegen, interpreted
+    expressions and no constraint propagation, so a fresh bound literal
+    compiles no class.  True when it does."""
+    if rows is None or rows > _INTERP_MAX_SCAN_ROWS:
+        return False
+    for key, value in (("spark.sql.codegen.wholeStage", "false"),
+                       ("spark.sql.codegen.factoryMode", "NO_CODEGEN"),
+                       ("spark.sql.constraintPropagation.enabled", "false")):
+        session.conf.set(key, value)
+    return True
 
 
 def _set_view(session, name: str, df) -> None:
@@ -232,7 +299,7 @@ class CompiledTemplate:
         self.param_names = list(dict.fromkeys(ph.canonical for ph in placeholders))
         self._in_params = in_context_placeholders(self.sql)
         # A clone: the caller's temp views as of prepare, a private SQLConf.
-        self.spark = _clone(spark)
+        self.spark = clone_session(spark)
         # Trial analysis (the reference's pre-binding pass, src/physical.rs:
         # 94-140): errors surface at prepare; the plan names tables, column
         # types and where operand i, bound to probe i, sits (the rest bind
@@ -288,7 +355,7 @@ class CompiledTemplate:
         # batch plans on a clone of the caller's session, which holds the
         # tables as registered and Spark's default codegen.  Not when a
         # layout table is read twice: a literal may still prune one scan.
-        self._flat = _clone(spark) if self._narrow and set(self.layouts) == {
+        self._flat = clone_session(spark) if self._narrow and set(self.layouts) == {
             t for _, t, _ in self._narrow} else None
         try:
             self._decide_batch_form(nulls, conj, sorted_limits)
@@ -297,12 +364,8 @@ class CompiledTemplate:
             raise
         # Fill the hot cache now; the counts feed the gate below.
         self.hot_rows = {t: df.count() for t, df in self.pinned.items()}
-        # Codegen policy, part 2: interpreted expressions on few touched rows.
-        est = self._interp_scan_rows() if self.nojit else None
-        self.interp_exprs = est is not None and est <= _INTERP_MAX_SCAN_ROWS
-        if self.interp_exprs:
-            self.spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-            self.spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+        # Codegen policy, part 2: no generated code at all on few touched rows.
+        self.interp_exprs = self.nojit and interpret_if_few(self.spark, self._interp_scan_rows())
 
     def _decide_batch_form(self, nulls: dict, conj: dict, sorted_limits: bool) -> None:
         """``batch_form`` "in" when the IN form — every placeholder's ``col =
@@ -342,10 +405,14 @@ class CompiledTemplate:
 
     def _interp_scan_rows(self) -> int | None:
         """Largest per-table count of rows an execution TOUCHES (hot: stats
-        rows plus ~one 1024-row batch; layout: a bucket); None on a flat scan."""
+        rows plus ~one 1024-row batch; layout: a bucket; flat: the table's
+        rows, ``footer_rows`` of the table as registered); None when a flat
+        table has no footer count."""
         ests = [self.hot_rows[t] // 1024 + 1024 if t in self.hot_rows
                 else self.layouts[t].rows // max(1, self.layouts[t].buckets)
-                if t in self.layouts else None for t in self.tables]
+                if t in self.layouts
+                else footer_rows(self.spark.table(t)._jdf.queryExecution().analyzed())
+                for t in self.tables]
         return None if not ests or None in ests else max(ests)
 
     def _session(self, rows: list[dict], literal: bool = False):
@@ -370,7 +437,7 @@ class CompiledTemplate:
             flat = flat and bool(kbs)
         if not narrowed:
             return self._flat if flat else self.spark
-        session = _clone(self.spark)
+        session = clone_session(self.spark)
         for t, kbs in narrowed.items():
             _set_view(session, t, _layout_df(session, self.layouts[t], kbs))
         return session

@@ -134,8 +134,8 @@ def test_layout_batch_over_every_bucket_reads_the_registered_table(engine, layou
     import tests.conftest as c
 
     stmt, keys = engine.prepare(SQL), [[k] for k in range(1, 129)]
-    clones, clone = [], simple_parser._clone
-    monkeypatch.setattr(simple_parser, "_clone", lambda s: clones.append(s) or clone(s))
+    clones, clone = [], simple_parser.clone_session
+    monkeypatch.setattr(simple_parser, "clone_session", lambda s: clones.append(s) or clone(s))
     df = stmt.execute_batch(keys)
     got = sorted(df.collect())
     assert clones == []

@@ -530,6 +530,30 @@ def bench_analytics() -> dict:
     }
 
 
+# The points row whose strategy each ``scan_metrics`` entry probes.
+SCAN_ROWS = {
+    "unprepared": "fstring_50keys",
+    "prepared_cold": "prepared_cold_50keys",
+    "prepared_layout": "prepared_layout_50keys",
+    "prepared_hot": "prepared_50keys",
+    "prepared_dpp_partitioned": "prepared_dpp_batch_50keys",
+}
+
+
+def merge_points(point_runs: list[dict]) -> tuple[dict, dict, dict]:
+    """(timings, plan_exec_split, scan_metrics) of several points
+    sessions: each row's minimum time, and the split and scan metrics of
+    the session that gave that row's time."""
+    timings = {k: min(r["timings"][k] for r in point_runs) for k in point_runs[0]["timings"]}
+
+    def best(row: str) -> dict:
+        return min(point_runs, key=lambda r: r["timings"][row])
+
+    split = {row: best(row)["plan_exec_split"][row] for row in point_runs[0]["plan_exec_split"]}
+    scans = {m: best(SCAN_ROWS[m])["scan_metrics"][m] for m in point_runs[0]["scan_metrics"]}
+    return timings, split, scans
+
+
 def main() -> None:
     section = os.environ.get("SPARK_GRAFT_BENCH_SECTION")
     if section == "points":
@@ -571,10 +595,7 @@ def main() -> None:
         "points": point_runs[-1],
         "analytics": run_section("analytics"),
     }
-    point_timings = {
-        k: min(r["timings"][k] for r in point_runs)
-        for k in point_runs[0]["timings"]
-    }
+    point_timings, plan_exec_split, scan_evidence = merge_points(point_runs)
     session_ratios = [
         {
             "steady_state": round(
@@ -598,8 +619,6 @@ def main() -> None:
 
     timings = {**point_timings, **parts["analytics"]["timings"]}
     inlist_n = int(timings.pop("_inlist_n"))
-    plan_exec_split = parts["points"]["plan_exec_split"]
-    scan_evidence = parts["points"]["scan_metrics"]
     rows = parts["analytics"]["rows"]
 
     total = sum(timings.values())

@@ -12,7 +12,9 @@ any scale:
   cluster-scale analog of DynamicFilterPhysicalExpr,
 - full partition parallelism (the reference's single-partition restriction is
   an artifact of its shared mutable filter, README.md:56 — values bound into
-  each execution's own plan have no such race).
+  each execution's own plan have no such race); a prepared statement that
+  touches few rows plans as one stage on its own cloned session
+  (``simple_parser.interpret_if_few``), where parallelism buys nothing.
 """
 
 from __future__ import annotations
@@ -39,7 +41,7 @@ TESTDATA_TABLES = (
 
 def default_spark_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     return {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",

@@ -24,10 +24,13 @@ Execution strategies (why, not a port of DynamicFilterExec):
   static predicate pushdown (row-group and, on a layout, partition
   pruning), which is the Spark-native counterpart of the reference pushing
   a DynamicFilterPhysicalExpr into the scan (src/physical.rs:247-255).
-  Unlike the reference we keep full partition parallelism — its
-  partition-0-only restriction (src/parameterized_statement.rs:86) is an
-  artifact of shared mutable filter state that params-as-literals does not
-  have.
+  Like the reference, which runs a lookup on partition 0 only
+  (src/parameterized_statement.rs:86), a statement the codegen gate
+  covers runs as one Spark stage: each table it reads is one partition,
+  so it plans no exchange and no broadcast, and a fresh-key execute is
+  one job.  Larger statements keep full partition parallelism, which
+  params-as-literals allows as the reference's shared filter state did
+  not.
 - ``literal`` (general path): ``spark.sql(sql, args=params)`` per execute
   — semantically exact for ANY Spark SQL statement; this is the twin of
   the reference's precomputed-logical-plan baseline
@@ -54,6 +57,7 @@ Execution strategies (why, not a port of DynamicFilterExec):
 
 from __future__ import annotations
 
+import json
 import re
 import threading
 from collections import OrderedDict
@@ -66,8 +70,9 @@ from .params import (
     normalize_params,
     scan,
 )
+from .plans import from_json
 from .simple_parser import (CompiledTemplate, clone_session, footer_rows, interpret_if_few,
-                            parse_simple_select, sql_df)
+                            parse_simple_select, read_views, sql_df)
 
 def _freeze(v):
     """Hashable canonical form of a bound parameter value (list-valued
@@ -125,7 +130,12 @@ class PreparedStatement:
     of any table (a hot batch, a layout bucket, a flat table's rows read
     from its parquet footers): point-lookup and hot templates and
     literal-path queries then run with no generated code, so a fresh key
-    compiles no class.  ``interpreted`` reports that choice.
+    compiles no class, and, unless the plan is nondeterministic
+    (``rand()``, ``spark_partition_id()``), as one Spark stage: each table
+    read through one partition, no join broadcast by size, no AQE, one
+    shuffle partition.  Such an execute is one Spark job (two stages when
+    an ``Expand``, as in ROLLUP, needs a shuffle).  ``interpreted``
+    reports that choice.
 
     ``execute()`` binds a single parameter set as plan literals, which
     reach the scan as pushed filters — parquet row-group pruning cold,
@@ -224,9 +234,11 @@ class PreparedStatement:
             # Typed-NULL pre-binding pass (reference src/physical.rs:94-140):
             # analyze the full statement once with NULL-bound placeholders so
             # prepare() surfaces analysis errors, not execute().  Its tables
-            # feed the codegen gate.
+            # and views feed the codegen gate.
             analyzed = self._literal_df(self._null_args)._jdf.queryExecution().analyzed()
-            self._interpreted = interpret_if_few(self._session, footer_rows(analyzed))
+            views = read_views(from_json(json.loads(analyzed.toJSON())), self.canonical_sql)
+            self._interpreted = interpret_if_few(self._session, footer_rows(analyzed), views,
+                                                 analyzed.deterministic())
 
     # -- execution ---------------------------------------------------------
 

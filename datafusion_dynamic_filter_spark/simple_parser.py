@@ -5,7 +5,8 @@ Spark parses and binds every prepared statement: one execute is
 session, whose SQLConf holds the codegen policy and whose table views carry
 the scan (a point layout's bucket-partitioned copy, where constant
 propagation turns a bound key into a partition filter, or a hot pinned
-copy).  ``execute_batch`` is one of two rewrites: the IN form, the rows'
+copy; one partition each when the codegen gate plans the statement as one
+stage).  ``execute_batch`` is one of two rewrites: the IN form, the rows'
 values bound into the text as one literal IN list (as an ``IN :p`` execute
 binds its list), when the analyzed plan shows it equals the union of
 per-row results; else the LATERAL form, a join of the statement to the
@@ -48,7 +49,8 @@ _NOT_OPERANDS = {"NOT", "END", "NULL", "TRUE", "FALSE"}
 # an execution TOUCHES few rows (sf0.1: hot 2.54 -> 1.89 s / 50 keys,
 # layout 3.61 -> 3.28, DPP batches 1.27 -> 1.06) and lose 6-14% on a flat
 # 150k-row scan: the crossover is ~1e5 touched rows.  Point-lookup and hot
-# templates and literal-path queries are gated; ``_flat`` is not.
+# templates and literal-path queries are gated; ``_flat`` is not.  Gated
+# deterministic statements also plan as one stage (one partition per table).
 _INTERP_MAX_SCAN_ROWS = 131072
 
 # The params view in the LATERAL form's SQL; each batch gets a fresh name.
@@ -181,19 +183,48 @@ def footer_rows(jplan) -> int | None:
     return most
 
 
-def interpret_if_few(session, rows: int | None) -> bool:
+def interpret_if_few(session, rows: int | None, views: list[str], deterministic: bool) -> bool:
     """The codegen gate: when an execution touches at most
     ``_INTERP_MAX_SCAN_ROWS`` rows of any table (``rows``, None when not
     known), ``session`` plans with no wholestage codegen, interpreted
     expressions and no constraint propagation, so a fresh bound literal
-    compiles no class.  True when it does."""
+    compiles no class.  A ``deterministic`` statement then also plans as
+    one stage (the reference runs a lookup on one partition,
+    src/parameterized_statement.rs:86): each of ``views`` that names a
+    temp view of ``session`` becomes one partition of itself, whose
+    ``SinglePartition`` satisfies every required distribution, so
+    aggregates, joins, windows and sorts plan no exchange; no join broadcasts by size (a hint still does), no AQE
+    (its separate stage jobs and re-optimization), and one shuffle
+    partition for the exchanges left (an ``Expand`` breaks the
+    partitioning).  A nondeterministic plan (``rand()``,
+    ``spark_partition_id()``) keeps its partitions and these confs, as
+    its values depend on them.  True when the gate applies."""
     if rows is None or rows > _INTERP_MAX_SCAN_ROWS:
         return False
-    for key, value in (("spark.sql.codegen.wholeStage", "false"),
-                       ("spark.sql.codegen.factoryMode", "NO_CODEGEN"),
-                       ("spark.sql.constraintPropagation.enabled", "false")):
+    confs = {"spark.sql.codegen.wholeStage": "false",
+             "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+             "spark.sql.constraintPropagation.enabled": "false"}
+    if deterministic:
+        confs.update({"spark.sql.autoBroadcastJoinThreshold": "-1",
+                      "spark.sql.adaptive.enabled": "false",
+                      "spark.sql.shuffle.partitions": "1"})
+        catalog = session._jsparkSession.sessionState().catalog()
+        for name in views:
+            if catalog.getTempView(name).isDefined():  # not a global or catalog view
+                _set_view(session, name, session.table(name).coalesce(1))
+    for key, value in confs.items():
         session.conf.set(key, value)
     return True
+
+
+def read_views(tree: Node, sql: str) -> list[str]:
+    """The views that analyzed plan ``tree`` reads (subquery plans
+    included) and ``sql`` names: a view read only inside another view's
+    definition belongs to that view."""
+    words = {t.lower() for t, _, _ in scan(sql)}
+    names = (x.args["desc"]["identifier"]["table"] for n in tree.walk()
+             for x in (n, *n.exprs(plans=True)) if x.name == "View")
+    return list(dict.fromkeys(t for t in names if t.lower() in words))
 
 
 def _set_view(session, name: str, df) -> None:
@@ -315,10 +346,10 @@ class CompiledTemplate:
                 trial = self.spark.sql(probe)
         except Exception:
             trial = sql_df(self.spark, self.sql, placeholders, nulls)
-        analyzed = from_json(json.loads(trial._jdf.queryExecution().analyzed().toJSON()))
+        jplan = trial._jdf.queryExecution().analyzed()
+        analyzed, deterministic = from_json(json.loads(jplan.toJSON())), jplan.deterministic()
         views, refs, conj, sorted_limits = _plan_facts(analyzed)
-        words = {t.lower() for t, _, _ in scan(self.sql)}
-        self.tables, self._types = [t for t in views if t.lower() in words], {}
+        self.tables, self._types = read_views(analyzed, self.sql), {}
         for i, c in conj.items():  # param name -> its operand columns' types
             self._types.setdefault(placeholders[i].canonical, set()).add(json.dumps(c[4]))
         # Codegen policy, part 1: no wholestage codegen (a new class per key
@@ -364,8 +395,11 @@ class CompiledTemplate:
             raise
         # Fill the hot cache now; the counts feed the gate below.
         self.hot_rows = {t: df.count() for t, df in self.pinned.items()}
-        # Codegen policy, part 2: no generated code at all on few touched rows.
-        self.interp_exprs = self.nojit and interpret_if_few(self.spark, self._interp_scan_rows())
+        # Codegen policy, part 2: no generated code at all on few touched
+        # rows, and one stage per execution when deterministic.
+        self.interp_exprs = self.nojit and interpret_if_few(
+            self.spark, self._interp_scan_rows(), self.tables, deterministic)
+        self.single_stage = self.interp_exprs and deterministic
 
     def _decide_batch_form(self, nulls: dict, conj: dict, sorted_limits: bool) -> None:
         """``batch_form`` "in" when the IN form — every placeholder's ``col =
@@ -419,7 +453,8 @@ class CompiledTemplate:
         """The session a build over ``rows`` plans on.  When the values
         ``rows`` bind to a ``_narrow`` placeholder leave a bucket out: a
         clone whose layout view keeps only their buckets (static partition
-        pruning).  When, for every such placeholder, they cover every
+        pruning), one partition of it on a single-stage template.  When,
+        for every such placeholder, they cover every
         bucket or one has no bucket (NULL, non-integral): ``_flat``, as the
         layout would prune nothing.  Else the template's own.  ``literal``:
         a scalar is a plan literal, whose bucket is a partition filter by
@@ -439,7 +474,8 @@ class CompiledTemplate:
             return self._flat if flat else self.spark
         session = clone_session(self.spark)
         for t, kbs in narrowed.items():
-            _set_view(session, t, _layout_df(session, self.layouts[t], kbs))
+            df = _layout_df(session, self.layouts[t], kbs)
+            _set_view(session, t, df.coalesce(1) if self.single_stage else df)
         return session
 
     def build(self, bound: dict):

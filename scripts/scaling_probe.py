@@ -223,10 +223,11 @@ def child(sf_dir: str) -> None:
     from datafusion_dynamic_filter_spark import Engine, registry
 
     role = os.environ.get("SPARK_GRAFT_SCALING_ROLE")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     eng = Engine(
         app_name=f"scaling-{os.path.basename(sf_dir)}",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.enabled": "false",
             # 48g at the ~sf100 tier: the persisted ANN index (2M 96-dim

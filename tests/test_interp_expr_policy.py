@@ -176,6 +176,9 @@ _CONFS = {
     "spark.sql.codegen.wholeStage": "true",
     "spark.sql.codegen.factoryMode": "FALLBACK",
     "spark.sql.constraintPropagation.enabled": "true",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": "10MB",
+    "spark.sql.shuffle.partitions": "200",
 }
 
 
@@ -184,6 +187,8 @@ def test_user_session_conf_untouched(engine, testdata):
     for sql, hot, mode in ((SQL, True, "dynamic"), (ROLLUP_SQL, False, "literal")):
         stmt = engine.prepare(sql, hot=hot, layout=False)
         assert stmt.mode == mode and stmt.interpreted
+        own = stmt._template.spark if stmt._template else stmt._session
+        assert own.conf.get("spark.sql.adaptive.enabled") == "false"  # single stage
         stmt.execute({"$1": 5}).collect()
         assert {k: engine.spark.conf.get(k, d) for k, d in _CONFS.items()} == before, mode
         stmt.close()
